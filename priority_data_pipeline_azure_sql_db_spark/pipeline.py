@@ -7,11 +7,17 @@ reference's blind append) → bookmark advance ONLY after every output
 table committed (the reference advanced lastRun even on partial failure,
 reference resources/priorityDataSource.py:185-195,229).
 
-The per-entity loop is fail-soft exactly like the reference's O22: an
-entity's error is recorded in the results and the loop continues. Entities
-are independent Spark jobs; on a cluster they can be submitted from a
-thread pool and the scheduler interleaves them — the sequential loop here
-is a driver-side choice, not an engine limit.
+Entities are independent Spark jobs, so ``refresh_data`` submits each
+entity's extract→parse→load→bookmark from a thread pool and
+``load_entity`` loads an entity's output tables concurrently; the
+scheduler interleaves their mostly single-task stages. Each pool is as
+wide as its work (entities, tables), capped at ``defaultParallelism``.
+Worker threads inherit the caller's job group, description and local
+properties, so labels and cancellation reach every job. Results come
+back in config order, and each entity is fail-soft exactly like the
+reference's O22: its error is recorded in its result and the others
+carry on. Entities whose output tables overlap (an entity and another
+entity's ``expand`` sub-form) still run in config order.
 
 Staging store: parquet directories (local stand-in for the Azure SQL
 staging schema). A real deployment swaps ``StagingStore`` for
@@ -26,11 +32,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .catalog import primary_key
 from .config import EntityConfig, ExtractionConfig
@@ -52,6 +60,26 @@ SUBFORM_SUFFIX = "_subform"
 
 PARTITION_COL = "_load_date"
 _AUDIT_TS = AUDIT_TS_COL  # single source of truth: operators/normalize.py
+
+
+def staging_table(name: str) -> str:
+    """Staging table of an entity or sub-form (``StagingStore.path``
+    lowercases too, so equal names here mean one directory)."""
+    return f"stg_{name.lower()}"
+
+
+def _pool(spark: SparkSession, n: int) -> ThreadPoolExecutor:
+    """A pool as wide as ``n`` work items, capped at the session's
+    default parallelism."""
+    width = min(n, spark.sparkContext.defaultParallelism)
+    return ThreadPoolExecutor(max_workers=max(1, width))
+
+
+def _submit(pool: ThreadPoolExecutor, spark: SparkSession, fn, *args) -> Future:
+    """Submit ``fn(*args)`` carrying the caller's local properties (job
+    group, description, scheduler pool, tags) into the worker thread.
+    Wrapped per call: the wrapper snapshots the properties when built."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
 
 @dataclass
@@ -438,7 +466,8 @@ class StagingStore:
 
         Touched = partitions the delta writes into ∪ partitions still
         holding an old version of a delta PK (found with a column-pruned
-        PK semi-join — a cheap scan, not a rewrite). Each touched partition
+        PK semi-join over the zone-map candidates among the OTHER
+        partitions — a cheap scan, not a rewrite). Each touched partition
         is replaced via write-to-temp + directory swap, so readers never
         see a half-written partition; untouched partitions' files are never
         opened, let alone rewritten. The driver-side ``collect`` holds
@@ -493,7 +522,8 @@ class StagingStore:
             self._clear_intent(table)
             return self._count(spark, table)
 
-        delta_keys = dpart.select(*pk).distinct()
+        new_vals = {r[0] for r in dpart.select(PARTITION_COL).distinct().collect()}
+        new_subs = {self._part_sub(v) for v in new_vals}
         meta = self._read_meta(table)
         if meta is not None and meta.get("pk") != pk:
             # merge key changed under the stats: the zone maps are keyed
@@ -506,21 +536,24 @@ class StagingStore:
             raw = spark.read.option("mergeSchema", "true") \
                 .parquet(self.path(table))
             boot_parts = self._partition_stats(raw, pk)
-            old_vals = {
-                r[0] for r in raw.join(delta_keys, on=pk, how="left_semi")
-                .select(PARTITION_COL).distinct().collect()
-            }
         else:
             boot_parts = dict(meta["parts"])
+        # old-version probe over the partitions the merge does NOT
+        # already rewrite: old_vals only feeds the touched union, so a
+        # delta landing in every standing partition (the common
+        # same-day refresh) skips the profile, read and semi-join
+        others = {s: st for s, st in boot_parts.items() if s not in new_subs}
+        old_vals = set()
+        if others:
             cand = self._prune_candidates(
-                boot_parts, self._delta_profile(delta, pk))
+                others, self._delta_profile(delta, pk))
             cand_df = self._read_subs(spark, table, cand)
-            old_vals = set() if cand_df is None else {
-                r[0] for r in
-                cand_df.join(delta_keys, on=pk, how="left_semi")
-                .select(PARTITION_COL).distinct().collect()
-            }
-        new_vals = {r[0] for r in dpart.select(PARTITION_COL).distinct().collect()}
+            if cand_df is not None:
+                old_vals = {
+                    r[0] for r in cand_df.join(
+                        dpart.select(*pk).distinct(), on=pk, how="left_semi")
+                    .select(PARTITION_COL).distinct().collect()
+                }
         touched = old_vals | new_vals
         subs = [self._part_sub(v) for v in touched]
         # merge target: direct-path read of ONLY the touched partitions
@@ -888,12 +921,12 @@ class PipelineRunner:
         genuinely nested sources and are verified equivalent in tests.
         """
         pk = primary_key(ent.entity_id)
-        out: dict[str, DataFrame] = {f"stg_{ent.entity_id.lower()}": self._finish(parent)}
+        out: dict[str, DataFrame] = {staging_table(ent.entity_id): self._finish(parent)}
         for sub in ent.expand:
             child = load_table(self.spark, self.source_dir, sub)
             child_keys = [self._child_key(child, k, ent.expand_keys) for k in pk]
             flat = flatten_expand(parent, child, pk, child_keys)
-            out[f"stg_{sub.lower()}"] = self._finish(flat)
+            out[staging_table(sub)] = self._finish(flat)
         return out
 
     def _finish(self, df: DataFrame) -> DataFrame:
@@ -907,6 +940,10 @@ class PipelineRunner:
                     result: RunResult | None = None) -> dict[str, int]:
         """O13: overwrite on full load, MERGE-upsert on incremental.
 
+        The output tables load concurrently (each is its own staging
+        directory); this returns once every table has finished, and
+        raises the first failure in output-table order.
+
         Child (sub-form) tables carry the parent PK in place of their own
         FK columns after explosion, so the merge key is parent_pk + the
         child's own non-FK key columns (e.g. lineitem: o_orderkey +
@@ -918,11 +955,14 @@ class PipelineRunner:
         ``<table>__cdc`` (overwritten per refresh — the CDC feed of the
         latest window) and its change-type counts land in
         ``result.cdc[table]``. The audit is ADVISORY: any failure in it
-        is recorded on ``result.cdc_error`` and the merge proceeds —
+        is recorded on ``result.cdc_error`` (one message per failing
+        table, joined in output-table order) and the merge proceeds —
         an observability feature must never block the load it observes.
         """
-        written: dict[str, int] = {}
-        for table, df in outputs.items():
+        cdc: dict[str, dict[str, int]] = {}
+        cdc_errors: dict[str, str] = {}
+
+        def load(table: str, df: DataFrame) -> int:
             src = table.removeprefix("stg_")
 
             def _key() -> list[str]:
@@ -932,13 +972,23 @@ class PipelineRunner:
                     k for k in primary_key(src) if k in df.columns
                 ]
 
-            if incremental and self.store.exists(table):
-                # the delta plan (scan → watermark filter → flatten →
-                # audit columns) is executed by the CDC audit write AND
-                # 2-3 times inside merge (touched-partition probes + the
-                # tmp write) — cache it once instead of re-running the
-                # full extract per action
-                df = df.cache()
+            if not (incremental and self.store.exists(table)):
+                # pk at full-load time seeds the partition-stats sidecar,
+                # so the FIRST incremental merge already prunes. An
+                # uncataloged entity (no PK registered) still full-loads —
+                # its first merge bootstraps the stats lazily instead.
+                try:
+                    key = _key()
+                except KeyError:
+                    key = None
+                return self.store.overwrite(df, table, pk=key)
+            # the delta plan (scan → watermark filter → flatten → audit
+            # columns) is executed by the CDC audit write AND 2-3 times
+            # inside merge (touched-partition probes + the tmp write) —
+            # cache it once instead of re-running the full extract per
+            # action
+            df = df.cache()
+            try:
                 key = _key()
                 if cdc_audit:
                     try:
@@ -956,7 +1006,7 @@ class PipelineRunner:
                         # the table's partition dirs out from under it
                         self.store.overwrite(audit, f"{table}__cdc")
                         if result is not None:
-                            result.cdc[table] = {
+                            cdc[table] = {
                                 r["change_type"]: r["n"]
                                 for r in self.store.read(
                                     self.spark, f"{table}__cdc"
@@ -965,58 +1015,70 @@ class PipelineRunner:
                                 .collect()
                             }
                     except Exception as exc:  # advisory: never block the load
-                        if result is not None:
-                            # ACCUMULATE per table — a scalar overwrite
-                            # would keep only the last failing table's
-                            # error in a multi-table entity
-                            msg = f"{table}: {type(exc).__name__}: {exc}"
-                            result.cdc_error = (
-                                f"{result.cdc_error}; {msg}"
-                                if result.cdc_error else msg
-                            )
-                try:
-                    written[table] = self.store.merge(self.spark, df, table, key)
-                finally:
-                    df.unpersist()
-            else:
-                # pk at full-load time seeds the partition-stats sidecar,
-                # so the FIRST incremental merge already prunes. An
-                # uncataloged entity (no PK registered) still full-loads —
-                # its first merge bootstraps the stats lazily instead.
-                try:
-                    key = _key()
-                except KeyError:
-                    key = None
-                written[table] = self.store.overwrite(df, table, pk=key)
-        return written
+                        cdc_errors[table] = f"{table}: {type(exc).__name__}: {exc}"
+                return self.store.merge(self.spark, df, table, key)
+            finally:
+                df.unpersist()
+
+        with _pool(self.spark, len(outputs)) as pool:
+            futures = {t: _submit(pool, self.spark, load, t, df)
+                       for t, df in outputs.items()}
+        if result is not None:
+            result.cdc.update({t: cdc[t] for t in outputs if t in cdc})
+            msgs = [cdc_errors[t] for t in outputs if t in cdc_errors]
+            if msgs:
+                result.cdc_error = "; ".join(msgs)
+        return {t: f.result() for t, f in futures.items()}
 
     # -- orchestration (EP1/EP2) ---------------------------------------------
 
+    def _run_entity(self, ent: EntityConfig, incremental: bool,
+                    cdc_audit: bool, after: list[Future]) -> RunResult:
+        """One entity's extract→parse→load→bookmark, fail-soft (O22),
+        started once the entities in ``after`` have finished."""
+        wait(after)
+        res = RunResult(entity=ent.entity_id)
+        try:
+            nested = self.extract_entity(ent, incremental)
+            outputs = self.parse_entity(ent, nested)
+            res.tables = self.load_entity(
+                ent, outputs, incremental,
+                cdc_audit=cdc_audit, result=res,
+            )
+            # Bookmark advances only after EVERY table for this entity
+            # committed (fixes reference at-most-once defect).
+            ent.last_run = self.config.format_bookmark(
+                self.extraction_ts.replace(tzinfo=timezone.utc)
+            )
+        except Exception as exc:  # fail-soft: record, continue (O22)
+            res.error = f"{type(exc).__name__}: {exc}"
+        return res
+
     def refresh_data(self, incremental: bool = True,
                      cdc_audit: bool = False) -> list[RunResult]:
-        """EP1: per-entity extract→parse→load→bookmark, fail-soft (O22).
+        """EP1: every entity's extract→parse→load→bookmark, run
+        concurrently and fail-soft (O22); results in config order.
         ``cdc_audit`` opts each incremental merge into the persisted
-        per-row change audit (see :meth:`load_entity`)."""
+        per-row change audit (see :meth:`load_entity`).
+
+        An entity waits for every earlier entity that writes one of its
+        staging tables, so shared tables see their writers in config
+        order. The pool hands out work FIFO, so whatever an entity
+        waits on has already started: no deadlock at any pool width."""
         self._new_run_identity()  # one fresh (id, ts) per run, not per runner
-        results: list[RunResult] = []
-        for ent in self.config.entities:
-            res = RunResult(entity=ent.entity_id)
-            try:
-                nested = self.extract_entity(ent, incremental)
-                outputs = self.parse_entity(ent, nested)
-                res.tables = self.load_entity(
-                    ent, outputs, incremental,
-                    cdc_audit=cdc_audit, result=res,
-                )
-                # Bookmark advances only after EVERY table for this entity
-                # committed (fixes reference at-most-once defect).
-                ent.last_run = self.config.format_bookmark(
-                    self.extraction_ts.replace(tzinfo=timezone.utc)
-                )
-            except Exception as exc:  # fail-soft: record, continue (O22)
-                res.error = f"{type(exc).__name__}: {exc}"
-            results.append(res)
-        return results
+        ents = self.config.entities
+        tables = [
+            {staging_table(ent.entity_id), *map(staging_table, ent.expand)}
+            for ent in ents
+        ]
+        futures: list[Future] = []
+        with _pool(self.spark, len(ents)) as pool:
+            for i, ent in enumerate(ents):
+                after = [f for f, t in zip(futures, tables) if t & tables[i]]
+                futures.append(_submit(
+                    pool, self.spark, self._run_entity,
+                    ent, incremental, cdc_audit, after))
+        return [f.result() for f in futures]
 
     def initial_data_load(self) -> list[RunResult]:
         """EP2: full load (dataStartDate lower bound, overwrite mode)."""

@@ -382,6 +382,74 @@ def test_composite_pk_zone_maps_prune_beyond_first_key(spark, tmp_path):
     assert got_n.count() == 0  # tenant 99 outside every range → all pruned
 
 
+def test_merge_skips_probe_for_partitions_it_rewrites(
+        spark, tmp_path, monkeypatch):
+    """The old-version probe only looks at partitions the merge does
+    not already rewrite. A delta landing in the table's only partition
+    (a same-day refresh) never profiles the delta, with the sidecar or
+    without it (bootstrap), and the merged rows and sidecar are the
+    ones the probing merge wrote. A delta landing in a NEW partition
+    still probes, so an update that moves a key leaves no stale row."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import StagingStore
+
+    def batch(rows, day):
+        return spark.createDataFrame(
+            rows, "pk bigint, v string"
+        ).withColumn("extractionid", F.lit(f"run-{day}")).withColumn(
+            "extractiontimestamputc",
+            F.lit(f"2026-01-0{day} 12:00:00").cast("timestamp"),
+        )
+
+    def state():
+        rows = {(r.pk, r.v) for r in store.read(spark, "t").collect()}
+        return rows, json.load(open(store._meta_path("t")))
+
+    sub1, sub2 = "_load_date=2026-01-01", "_load_date=2026-01-02"
+    calls = []
+    profile = StagingStore._delta_profile
+
+    def spy(self, delta, pk):
+        calls.append(pk)
+        return profile(self, delta, pk)
+
+    monkeypatch.setattr(StagingStore, "_delta_profile", spy)
+    store = StagingStore(root=str(tmp_path / "stg"))
+    store.overwrite(batch([(1, "a"), (2, "b"), (3, "c")], 1), "t", pk=["pk"])
+
+    # same-day update + insert: the only partition is rewritten anyway
+    assert store.merge(spark, batch([(2, "b2"), (4, "d")], 1), "t", ["pk"]) == 4
+    assert calls == []
+    assert state() == (
+        {(1, "a"), (2, "b2"), (3, "c"), (4, "d")},
+        {"pk": ["pk"], "parts": {
+            sub1: {"rows": 4, "min": 1, "max": 4, "null": False}}},
+    )
+
+    # no sidecar: the bootstrap stats scan runs, the probe still skips
+    store._clear_meta("t")
+    assert store.merge(spark, batch([(1, "a2")], 1), "t", ["pk"]) == 4
+    assert calls == []
+    assert state() == (
+        {(1, "a2"), (2, "b2"), (3, "c"), (4, "d")},
+        {"pk": ["pk"], "parts": {
+            sub1: {"rows": 4, "min": 1, "max": 4, "null": False}}},
+    )
+
+    # next day: pk=3 moves partitions, found by the probe of day 1
+    assert store.merge(spark, batch([(3, "c2")], 2), "t", ["pk"]) == 4
+    assert calls == [["pk"]]
+    assert state() == (
+        {(1, "a2"), (2, "b2"), (3, "c2"), (4, "d")},
+        {"pk": ["pk"], "parts": {
+            sub1: {"rows": 3, "min": 1, "max": 4, "null": False},
+            sub2: {"rows": 1, "min": 3, "max": 3, "null": False}}},
+    )
+
+
 def test_delta_profile_single_action_and_semantics(
         spark, tmp_path, monkeypatch):
     """Round 18 (VERDICT r17 ask #4): ``_delta_profile`` pays exactly
@@ -861,12 +929,12 @@ def test_refresh_cdc_audit_counts_and_fail_soft(spark, sf_dir, tmp_path, monkeyp
     v1_dir = str(tmp_path / "v1")
     _cdc_v1_source(spark, sf_dir, v1_dir)
 
-    def cfg(last_run):
+    def cfg(last_run, expand=()):
         return ExtractionConfig.from_dict({
             "datasourceName": "cdc", "systemTimezone": "UTC",
             "entities": [{
                 "EntityID": "orders", "filterFlag": True,
-                "filterField": "o_orderdate", "expand": [],
+                "filterField": "o_orderdate", "expand": list(expand),
                 "lastRun": last_run, "dataStartDate": "1990-01-01 00:00:00",
             }],
         })
@@ -914,6 +982,26 @@ def test_refresh_cdc_audit_counts_and_fail_soft(spark, sf_dir, tmp_path, monkeyp
     assert res2.error is None
     assert res2.cdc_error and "audit exploded" in res2.cdc_error
     assert res2.tables["stg_orders"] > 0
+
+    # a two-table entity whose audits BOTH fail while its tables load
+    # concurrently: one message per table, in output-table order
+    def boom_keyed(target, delta, key, *a, **k):
+        raise RuntimeError(f"audit exploded on {key}")
+
+    monkeypatch.setattr(P, "cdc_audit_delta", boom_keyed)
+    store2 = P.StagingStore(str(tmp_path / "stg2"))
+    P.PipelineRunner(
+        spark, cfg(None, ["lineitem"]), store2, sf_dir).initial_data_load()
+    (res3,) = P.PipelineRunner(
+        spark, cfg("1998-01-01 00:00:00", ["lineitem"]), store2, sf_dir
+    ).refresh_data(incremental=True, cdc_audit=True)
+    assert res3.error is None
+    assert res3.cdc_error == (
+        "stg_orders: RuntimeError: audit exploded on ['o_orderkey']; "
+        "stg_lineitem: RuntimeError: audit exploded on "
+        "['o_orderkey', 'l_linenumber']"
+    )
+    assert list(res3.tables) == ["stg_orders", "stg_lineitem"]
 
 
 def test_staging_empty_overwrite_no_wedge(spark, tmp_path):
@@ -1075,6 +1163,109 @@ def test_merge_crash_rolls_forward_whole_table(spark, sf_dir, tmp_path):
     assert store.read(spark, "stg_nation").count() == before
     assert not os.path.isdir(final + ".__old__")
     assert not os.path.isdir(final + ".__tmp__")
+
+
+def test_concurrent_runner_keeps_contracts(spark, sf_dir, tmp_path):
+    """Entities run concurrently, yet results come back in config
+    order, the bad entity fails alone without advancing its bookmark,
+    every table carries the one run identity, and every job the entity
+    threads submit lands in the caller's job group."""
+    from datetime import timezone
+
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import PipelineRunner, StagingStore
+
+    cfg = make_config()
+    store = StagingStore(str(tmp_path / "stg"))
+    runner = PipelineRunner(spark, cfg, store, sf_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("ep-test", "concurrent runner contracts")
+    try:
+        results = runner.refresh_data(incremental=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    grouped = set(tracker.getJobIdsForGroup("ep-test"))
+    strays = set(tracker.getJobIdsForGroup()) - ungrouped
+
+    assert [r.entity for r in results] == [e.entity_id for e in cfg.entities]
+    orders, nation, bad = results
+    assert orders.error is None and nation.error is None
+    assert orders.tables == {"stg_orders": 1500, "stg_lineitem": 6000}
+    assert nation.tables == {"stg_nation": 25}
+    assert bad.error and "PATH_NOT_FOUND" in bad.error and not bad.tables
+    stamp = cfg.format_bookmark(runner.extraction_ts.replace(tzinfo=timezone.utc))
+    assert [e.last_run for e in cfg.entities] == [stamp, stamp, None]
+    for t in ("stg_orders", "stg_lineitem", "stg_nation"):
+        ids = {r[0] for r in store.read(spark, t)
+               .select("extractionid").distinct().collect()}
+        assert ids == {runner.extraction_id}, t
+
+    assert grouped, "no job reached the caller's job group"
+    assert grouped == set(range(min(grouped), max(grouped) + 1))
+    assert not strays, f"jobs outside the caller's group: {sorted(strays)}"
+
+
+def test_overlapping_entities_run_in_config_order(spark, sf_dir, tmp_path):
+    """``orders`` expands into ``stg_lineitem`` and the ``lineitem``
+    entity writes the same table: the later entity waits for the
+    earlier one, so the concurrent run stages the same tables and
+    returns the same results as running the entities one after
+    another, and every bookmark advances."""
+    from datetime import timezone
+
+    from priority_data_pipeline_azure_sql_db_spark.config import ExtractionConfig
+    from priority_data_pipeline_azure_sql_db_spark.pipeline import (
+        AUDIT_EXCLUDE, PipelineRunner, StagingStore)
+
+    ents = [
+        {"EntityID": "orders", "filterFlag": True, "filterField": "o_orderdate",
+         "expand": ["lineitem"], "dataStartDate": "1990-01-01 00:00:00"},
+        {"EntityID": "nation", "filterFlag": False, "expand": []},
+        {"EntityID": "lineitem", "filterFlag": False, "expand": []},
+    ]
+
+    def cfg(e):
+        return ExtractionConfig.from_dict(
+            {"datasourceName": "ov", "systemTimezone": "UTC", "entities": e})
+
+    def staged(store):
+        out = {}
+        for t in ("stg_orders", "stg_lineitem", "stg_nation"):
+            df = store.read(spark, t).drop(*AUDIT_EXCLUDE)
+            out[t] = (sorted(df.columns), sorted(map(tuple, df.collect())))
+        return out
+
+    def stamped(c, runner):
+        stamp = c.format_bookmark(
+            runner.extraction_ts.replace(tzinfo=timezone.utc))
+        return all(e.last_run == stamp for e in c.entities)
+
+    together = cfg(ents)
+    store_c = StagingStore(str(tmp_path / "concurrent"))
+    runner = PipelineRunner(spark, together, store_c, sf_dir)
+    results_c = runner.initial_data_load()
+    assert stamped(together, runner)
+
+    store_s = StagingStore(str(tmp_path / "sequential"))
+    results_s = []
+    for e in ents:
+        one = cfg([e])
+        runner = PipelineRunner(spark, one, store_s, sf_dir)
+        results_s += runner.initial_data_load()
+        assert stamped(one, runner)
+
+    def summary(results):
+        return [(r.entity, r.tables, r.error) for r in results]
+
+    assert summary(results_c) == summary(results_s)
+    assert all(r.error is None for r in results_c)
+    got = staged(store_c)
+    assert got == staged(store_s)
+    # the lineitem entity, last in config order, wrote stg_lineitem
+    # (the orders sub-form would have carried the parent's o_orderkey)
+    assert "o_orderkey" not in got["stg_lineitem"][0]
 
 
 def test_runner_fresh_identity_per_refresh(spark, sf_dir, tmp_path):
