@@ -25,6 +25,32 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The correctness driver evaluates the first 50 registry entries in order.
+# Round-20 rotation. Composition, in order:
+# (1) 14 changed-call-path entries (I2 head insertions): the
+#     curation HTML/boilerplate pass-through columns, the plan-only
+#     spread_if_narrow decision and its callers, the Arrow HTML kernel,
+#     and the concurrent pipeline runner / probe-free MERGE
+#     (pipeline_refresh_cdc_audit).
+# (2) the 12-entry r19 displaced tail.
+# (3) the r16 bucket head — 24 of 41 (entries last checked in r16,
+#     r16 window order). The 17-entry tail is displaced to r21's head
+#     per I2:
+#     text_pii_scrub, text_winnow_fingerprints,
+#     dedup_fingerprint_docs, dedup_ngram_jaccard,
+#     dedup_cluster_canonical, dedup_contamination_check,
+#     ann_cosine_topk, ann_cosine_topk_lsh, embedding_centroids,
+#     embedding_quantize_int8, events_json_extract,
+#     events_sessionize, events_multires_rollup,
+#     sample_documents_hash, pipeline_nest_explode_roundtrip,
+#     pipeline_cast_types, pipeline_merge_upsert.
+# 14 + 12 + 24 = 50 exactly.
+#
+# Schedule from here: r21: the r16 displaced tail + the r17 bucket head
+# (fills to 50). Every bucket clears within 4 rounds of its last check,
+# tails within 5, per I1/I2.
+#
+# Previous round's comment (kept for the audit trail):
+#
 # Round-19 rotation (optimization round 2): the window the r18 rotation
 # comment published (the 4-entry r18 displaced tail + the r15 bucket —
 # 4 + 46 = 50 exactly, no r16 head needed), amended per I2 and VERDICT
@@ -721,66 +747,59 @@ def entry(spark: SparkSession) -> DataFrame:
 #   r15: r11 bucket (50)
 #
 CHECK_ORDER = [
-    # (1) the 4-entry r18 displaced tail — at the I2 worst-case
-    # staleness clock; displacement-exempt this round
-    "scalar_array_funcs",
-    "conditional_null_funcs",
-    "pipeline_count_rows",
-    "pipeline_limit_probe",
-    # (2) changed-call-path insertions (I2; VERDICT r18 ask #2 + the
-    # r19 in-round changes — see the rotation comment), riskiest first
+    # (1) changed-call-path insertions (I2), riskiest first
+    "pipeline_curation_html",
+    "pipeline_curation_dsir",
+    "text_html_extract",
+    "streaming_html_ingest",
+    "pipeline_curation_incremental",
+    "sample_dsir_weights",
+    "q1_pricing_summary",
+    "multimodal_lossless_payloads",
+    "dedup_boilerplate_lines",
     "pipeline_curation_v3",
     "pipeline_curation_funnel",
-    "pipeline_curation_html",
-    "pipeline_curation_incremental",
-    "filter_quality_quantile",
-    "dedup_exact_docs",
-    "dedup_boilerplate_lines",
-    "text_quality_score",
-    "text_cleaning_pass_profile",
-    "sample_source_cap",
     "multimodal_codec_mix",
-    "multimodal_lossless_payloads",
-    # (3) the r15 bucket head — 34 of 46, r15 window order (the
-    # 12-entry tail is displaced to r20's head per I2; see the
-    # rotation comment). The r19-changed r15 members
-    # (sample_dsir_weights, pipeline_curation_dsir, the dedup index
-    # twins, embedding_near_dup_indexed, ann_ivf_index_persisted) get
-    # their driver evidence here.
-    "pipeline_watermark_filter",
-    "er_blocking_skew_audit",
-    "dedup_winnow_pairs_indexed",
-    "dedup_jaccard_pairs_indexed",
-    "sample_epoch_shuffle_wide",
-    "text_bpe_tokens_arrow",
-    "text_bpe_tokens_large",
-    "er_incremental_match",
-    "er_assign_to_golden",
-    "er_assign_from_store",
-    "er_store_append_serve",
-    "dedup_index_append_serve",
-    "sample_dsir_weights",
-    "pipeline_curation_dsir",
-    "er_first_token_pairs",
-    "export_curriculum_readback",
-    "dedup_minhash_lsh_md5",
-    "dedup_simhash_pairs_md5",
-    "streaming_er_maintenance",
     "multimodal_video_frames",
-    "pack_training_sequences_bpe",
-    "embedding_near_dup_indexed",
-    "profile_data_card",
-    "export_jsonl_corpus",
-    "sample_source_budget",
-    "sample_quality_weighted",
-    "embedding_dedup_canonical",
-    "text_bpe_train",
-    "export_training_shards",
-    "multimodal_binary_meta",
-    "ann_ivf_index_persisted",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q13_customer_distribution",
+    "pipeline_refresh_cdc_audit",
+    # (2) the r19 displaced tail
+    "scalar_date_math_funcs",
+    "type_mapping_enrichment",
+    "pipeline_config_flatten",
+    "pipeline_project_drop",
+    "pipeline_audit_columns",
+    "pipeline_flatten_subform",
+    "events_pivot_types",
+    "q9_product_profit",
+    "q15_top_supplier",
+    "q17_small_quantity_revenue",
+    "q19_discounted_revenue",
+    "q22_idle_customers",
+    # (3) the r16 bucket head (see the rotation comment)
+    "profile_documents_stats",
+    "pipeline_catalog_top1",
+    "pipeline_probe_counts",
+    "skew_salted_join",
+    "window_range_trailing_30d",
+    "ann_cosine_topk_ivf_full",
+    "multimodal_gif_codec",
+    "events_scd2_with_deletes",
+    "pack_length_bucket_batches_wide",
+    "multimodal_real_codec",
+    "pack_materialized_sequences",
+    "scalar_regex_funcs",
+    "sample_stratified_mix",
+    "approx_sketches",
+    "streaming_tumbling_counts",
+    "streaming_session_counts",
+    "streaming_dedup_events",
+    "streaming_stream_stream_join",
+    "streaming_sliding_counts",
+    "streaming_static_join",
+    "text_token_stats",
+    "text_langid_heuristic",
+    "text_tfidf_top_terms",
+    "text_repetition_ratio",
 ]
 
 

@@ -108,7 +108,18 @@ def build_curation(docs: DataFrame, config: dict) -> DataFrame:
     """Compose the configured stage chain over a (doc_id, text, source)
     relation. Returns the admitted rows with whatever bookkeeping
     columns the final stage adds. Raises ``ValueError`` on unknown ops
-    or invalid parameters — at build time, before any job runs.
+    or invalid parameters — at build time, before any job runs: building
+    only composes the plan and never executes any part of it.
+
+    Stages that rewrite text (``html_extract``, ``boilerplate_lines``)
+    pass the relation's other columns through their operator (the
+    operators' ``carry``) instead of joining them back by ``doc_id``. A
+    join-back is a second consumer of everything upstream — Catalyst
+    prunes each consumer's columns differently, so ReuseExchange cannot
+    share the copies, and the HTML parse and the DSIR scoring would run
+    once per consumer. Carrying assumes ``doc_id`` is a key (one row
+    per id), the contract every curation input already has; rows with
+    a null ``doc_id`` are dropped, as the inner join-backs did.
 
     Side effect (documented per round-19 ADVICE): a ``dsir`` stage
     followed by a multi-consumer decision tail ``.cache()``s its narrow
@@ -140,14 +151,16 @@ def build_curation(docs: DataFrame, config: dict) -> DataFrame:
     # the better medium. Cache only pays when the proxy sits directly
     # over a scan + expensive projection (filter_quality_quantile's
     # shape — nothing to reuse, every consumer would re-scan).
+    # html_extract does NOT count: its stage ends in the Python kernel,
+    # and the spread exchange it shares sits BELOW the kernel, so every
+    # decision consumer would run the HTML parse again.
     exchange_topped = False
     for i, st in enumerate(stages):
         if skip_next:
             skip_next = False
             continue
         op = st.get("op")
-        if op in ("html_extract", "boilerplate_lines", "dsir",
-                  "temperature_mix"):
+        if op in ("boilerplate_lines", "dsir", "temperature_mix"):
             exchange_topped = True
         if op == "html_extract":
             # optional FIRST stage (round 13): raw crawl HTML → text —
@@ -170,20 +183,27 @@ def build_curation(docs: DataFrame, config: dict) -> DataFrame:
             df = _drop_stale_stats(df)
             extra = [c for c in df.columns
                      if c not in ("doc_id", html_col, "text")]
-            content = extract_main_content(
-                df.select("doc_id", html_col), html_col, "doc_id",
+            if extra:
+                # the other columns pass through the kernel (carry), so
+                # the input has one consumer; this filter keeps the
+                # inner join-back's semantics, which dropped null ids
+                df = df.filter(F.col("doc_id").isNotNull())
+            df = extract_main_content(
+                df, html_col, "doc_id",
                 min_len=int(st.get("min_len", HTML_MIN_BLOCK_LEN)),
                 max_link_density=float(
                     st.get("max_link_density", HTML_MAX_LINK_DENSITY)),
+                carry=extra,
             ).withColumnRenamed("content", "text")
-            df = (content.join(df.select("doc_id", *extra), "doc_id")
-                  if extra else content)
         elif op == "linify":
             width = int(st.get("width", 8))
             if width < 1:
                 raise ValueError(f"stage {i}: linify width must be >= 1")
             df = _linify(df, width)
         elif op == "boilerplate_lines":
+            # this stage's own outputs supersede any an earlier
+            # boilerplate stage left (its stats describe the old text)
+            df = _drop_stale_stats(df).drop("n_lines_kept", "n_lines_dropped")
             extra = [c for c in df.columns if c not in ("doc_id", "text")]
             # "stats": true (round 18) — emit _n_chars/_n_alpha/
             # _n_tokens per-line sums from the reassembly aggregate;
@@ -191,16 +211,10 @@ def build_curation(docs: DataFrame, config: dict) -> DataFrame:
             # the stats instead of the reassembled text, and Catalyst
             # prunes the collect_list reassembly out of every consumer
             # that doesn't read text (see remove_boilerplate_lines).
-            cleaned = remove_boilerplate_lines(
-                df.select("doc_id", "text"),
-                min_docs=int(st.get("min_docs", 2)),
-                emit_stats=bool(st.get("stats", False)),
+            df = remove_boilerplate_lines(
+                df, min_docs=int(st.get("min_docs", 2)),
+                emit_stats=bool(st.get("stats", False)), carry=extra,
             )
-            if extra:
-                cleaned = cleaned.join(
-                    df.select("doc_id", *extra), "doc_id"
-                )
-            df = cleaned
         elif op == "quantile_gate":
             need(st, i, "drop_num", "drop_den")
             df = df.withColumn("score", _stats_or_alpha_score(df))

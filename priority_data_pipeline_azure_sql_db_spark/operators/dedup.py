@@ -609,6 +609,7 @@ def remove_boilerplate_lines(
     drop_empty: bool = True,
     normalize: bool = False,
     emit_stats: bool = False,
+    carry: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
     """LINE-level dedup (CCNet, Wenzek et al. 2020): drop every line
     whose trimmed form appears in >= ``min_docs`` distinct documents —
@@ -669,7 +670,26 @@ def remove_boilerplate_lines(
     only for whitespace separators (token linearity breaks otherwise)
     — any other ``sep`` raises. Pinned by
     tests/test_northstar.py::test_boilerplate_emit_stats_exact.
+
+    ``carry`` names input columns returned unchanged next to each
+    surviving document, after the other outputs — the result of
+    joining them back by id, without the second consumer of the input
+    that a join-back adds (a consumer that re-runs everything upstream:
+    an HTML parse, a DSIR scoring join). They ride every line as one
+    struct and leave the reassembly aggregate as its ``first()`` value,
+    which assumes ``id_col`` is a key (one row per id, so every line of
+    a document carries the same struct) — the contract every curation
+    input already has.
     """
+    carry = list(carry)
+    clash = {id_col, text_col, "n_lines_kept", "n_lines_dropped",
+             "_n_chars", "_n_alpha", "_n_tokens"} & set(carry)
+    if clash:
+        raise ValueError(
+            f"remove_boilerplate_lines: cannot carry {sorted(clash)}")
+    # the carried columns travel as ONE struct column, so no input name
+    # can collide with the operator's own intermediate columns
+    ride = ["_carry"] if carry else []
     # round-19 ADVICE fix: validate against the JAVA regex \s set
     # ([ \t\n\x0B\f\r]) explicitly, not Python str.strip() — Python
     # treats NBSP/\x85/\x1c-\x1f/Unicode spaces as whitespace but Java
@@ -696,7 +716,8 @@ def remove_boilerplate_lines(
     # executes twice. With the filter pinned here BOTH branches carry
     # it and the spread exchange is planned once.
     t = spread(
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_txt"))
+        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_txt"),
+                  *([F.struct(*carry).alias("_carry")] if carry else []))
         .filter(F.col("doc").isNotNull()),
         "doc",
     )
@@ -706,7 +727,8 @@ def remove_boilerplate_lines(
     # character and reassemble garbage.
     sep_re = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
     lines = t.select(
-        "doc", F.posexplode(F.split(F.col("_txt"), sep_re)).alias("pos", "line")
+        "doc", *ride,
+        F.posexplode(F.split(F.col("_txt"), sep_re)).alias("pos", "line"),
     ).withColumn("nline", F.trim(F.col("line")))
     if normalize:
         # CCNet key: lowercase, zero digits, strip punctuation, collapse
@@ -717,9 +739,16 @@ def remove_boilerplate_lines(
                 F.lower(F.col("nline")),
                 "[0-9]", "0"), "[^a-z0-9\\s]", ""), "\\s+", " ")),
         )
+    # The carried struct rides the (doc, line) distinct too. It is
+    # constant per doc (the key contract), so the document frequency is
+    # unchanged; what it buys is plan sharing, like the isnotnull(doc)
+    # pin above: without it, column pruning cuts _carry from this
+    # branch's copy of the spread exchange but not from the lines
+    # branch's copy, the copies differ, and everything above the
+    # exchange executes twice.
     boiler = (
         lines.filter(F.col("nline") != "")
-        .select("doc", "nline")
+        .select("doc", "nline", *ride)
         .distinct()
         .groupBy("nline")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -756,6 +785,11 @@ def remove_boilerplate_lines(
         F.sum(
             F.when(~F.col("_dup") & F.col("_ne"), 1).otherwise(0)
         ).cast("bigint").alias("_n_nonempty_kept"),
+        # an aggregate VALUE, not a grouping key: a filter a downstream
+        # join infers on a carried column (isnotnull(source) from a
+        # per-source join) would be pushed through a grouping key into
+        # the lines branch's copy of the spread exchange only
+        *(F.first(r).alias(r) for r in ride),
     ]
     stats_cols = []
     if emit_stats:
@@ -783,6 +817,14 @@ def remove_boilerplate_lines(
             F.col("_n_tokens"),
         ]
     out = flagged.groupBy("doc").agg(*aggs)
+    if carry:
+        # VACUOUS (every group has a line, so first() of a non-null
+        # struct is non-null) but load-bearing like isnotnull(doc): a
+        # consumer that reads none of the carried columns (a quantile
+        # histogram over the stats) would otherwise prune _carry from
+        # the aggregate and, below it, from its copy of the spread
+        # exchange — a third copy, and a third upstream execution
+        out = out.filter(F.col("_carry").isNotNull())
     if drop_empty:
         out = out.filter(F.col("_n_nonempty_kept") > 0)
     return out.select(
@@ -791,6 +833,7 @@ def remove_boilerplate_lines(
         "n_lines_kept",
         "n_lines_dropped",
         *stats_cols,
+        *(F.col("_carry")[c].alias(c) for c in carry),
     )
 
 

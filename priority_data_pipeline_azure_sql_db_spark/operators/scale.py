@@ -62,13 +62,21 @@ def spread_if_narrow(df: DataFrame, *key_cols,
     splits into thousands of partitions and an unconditional
     repartition would shuffle the whole input for nothing.
 
-    The check is plan-time driver work (physical partition count of the
-    sub-plan — file split arithmetic for a scan, no job runs). Use for
-    heavy per-row work directly over a scan (wide aggregates, Arrow
-    codec stages); keep plain :func:`spread` for row-AMPLIFYING
-    operators whose downstream keys match ``key_cols`` — there the
-    pinned exchange *replaces* one Catalyst would insert anyway, so it
-    is free even at scale.
+    The decision reads the PLAN and never runs it. If the input's
+    executed plan is an ``AdaptiveSparkPlanExec`` (AQE on and an
+    exchange below), its partition count is not known until the
+    exchanges run — AQE sizes them at run time and may coalesce them to
+    ONE partition (module docstring, mechanism 2) — so the input is
+    spread without asking. Asking via ``df.rdd.getNumPartitions()``
+    would materialize every shuffle stage below the input at BUILD
+    time, and the real run would then execute all of it again.
+    Otherwise (a scan, or an AQE-off session) the count is driver-only
+    arithmetic — file splits for a scan, the pinned partition count
+    for a static exchange — and no job runs. Use for heavy per-row work
+    directly over a scan (wide aggregates, Arrow codec stages); keep
+    plain :func:`spread` for row-AMPLIFYING operators whose downstream
+    keys match ``key_cols`` — there the pinned exchange *replaces* one
+    Catalyst would insert anyway, so it is free even at scale.
 
     ``key_cols`` may be names or Column expressions. Prefer a
     deterministic high-cardinality KEY over the keyless round-robin
@@ -83,10 +91,12 @@ def spread_if_narrow(df: DataFrame, *key_cols,
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
-        current = df.rdd.getNumPartitions()
+        plan = df._jdf.queryExecution().executedPlan()
+        adaptive = plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+        current = 0 if adaptive else df.rdd.getNumPartitions()
     except Exception:
-        # exotic plans (e.g. streaming sources) can refuse RDD
-        # conversion at plan time — fall back to the pinned repartition,
+        # exotic plans (e.g. streaming sources) can refuse planning or
+        # RDD conversion here — fall back to the pinned repartition,
         # which is always correct, just not always free
         current = 0
     if current >= n:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .scale import spread
 
@@ -1078,13 +1079,25 @@ def extract_main_content(
     id_col: str = "doc_id",
     min_len: int = HTML_MIN_BLOCK_LEN,
     max_link_density: float = HTML_MAX_LINK_DENSITY,
+    carry: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
-    """Distributed HTML main-content extraction: (id, content) via an
-    Arrow ``mapInPandas`` kernel over :func:`_extract_main_content_str`
-    — embarrassingly parallel, no shuffle, no driver state; the parser
-    allocates per document and the kernel per Arrow batch. The one
-    text-pipeline stage the repo lacked (VERDICT r12 §missing #6): raw
-    crawl HTML → text, upstream of linify/quality/dedup.
+    """Distributed HTML main-content extraction: (id, content, *carry)
+    via an Arrow ``mapInArrow`` kernel over
+    :func:`_extract_main_content_str` — embarrassingly parallel, no
+    shuffle, no driver state; the parser allocates per document and the
+    kernel per Arrow batch. The one text-pipeline stage the repo lacked
+    (VERDICT r12 §missing #6): raw crawl HTML → text, upstream of
+    linify/quality/dedup.
+
+    ``carry`` names input columns the kernel returns unchanged next to
+    each row's content: the Arrow arrays pass through as they arrived
+    (same values, same types, nulls kept — no pandas round trip, which
+    would turn a nullable bigint into float64 and lose precision above
+    2^53). A caller that needs the input's other columns beside the
+    text passes them here instead of joining them back by id: a
+    join-back is a second consumer of the input, and since the kernel
+    sits ABOVE the spread exchange, a reused exchange cannot save it —
+    every consumer runs the HTML parse again.
 
     Scale shape: embarrassingly parallel map stage — nothing here
     accumulates state across rows or partitions. The input is SPREAD
@@ -1093,25 +1106,33 @@ def extract_main_content(
     arriving as one split would otherwise run it on ONE core (measured
     2.24 s → 0.66 s at sf0.1, the same single-partition pathology the
     shingle pipelines pin against). At 100 TB the scan arrives in many
-    splits and the exchange moves only (id, html) rows once, before
-    the row-expensive work.
+    splits and the exchange moves only (id, html, *carry) rows once,
+    before the row-expensive work.
     """
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    from .scale import spread
+    carry = list(carry)
+    clash = {id_col, html_col, "content"} & set(carry)
+    if clash:
+        raise ValueError(f"extract_main_content: cannot carry {sorted(clash)}")
+    out_schema = StructType([
+        df.schema[id_col], StructField("content", StringType()),
+        *(df.schema[c] for c in carry),
+    ])
+    names = out_schema.fieldNames()
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "content": [
-                    _extract_main_content_str(h, min_len, max_link_density)
-                    for h in pdf[html_col]
-                ],
-            })
+        for b in batches:
+            content = pa.array(
+                [_extract_main_content_str(h, min_len, max_link_density)
+                 for h in b.column(html_col).to_pylist()],
+                pa.string(),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [b.column(id_col), content, *(b.column(c) for c in carry)],
+                names,
+            )
 
-    return spread(df.select(id_col, html_col), id_col).mapInPandas(
-        kernel, f"{id_col} {id_type}, content string"
+    return spread(df.select(id_col, html_col, *carry), id_col).mapInArrow(
+        kernel, out_schema
     )

@@ -2129,7 +2129,7 @@ def text_html_extract(spark, sf_dir):
     """HTML main-content extraction (round 13, VERDICT r12 ask #6) —
     the C4/CCNet stage BEFORE linify: raw crawl HTML → text via
     tag-level drops + block link-density/length rules
-    (operators/text.py extract_main_content, Arrow mapInPandas).
+    (operators/text.py extract_main_content, Arrow mapInArrow).
 
     Graded the codec-twin way: each document's text is wrapped — split
     into two <p> paragraphs, entity-escaped — in a deterministic page

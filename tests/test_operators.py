@@ -572,6 +572,67 @@ def test_html_extract_main_content_rules(spark):
     assert out == {1: para, 2: "", 3: ""}
 
 
+def _carry_fixture(spark, payload_col, payloads):
+    """One row per payload, with carried columns of assorted types —
+    every one null on some row, the bigint above 2^53 (where a pandas
+    float64 round trip would lose it) — and a null-id row."""
+    import datetime
+    import decimal
+
+    rows = [
+        (1, payloads[0], 2**60 + 1, "src-a", 0.5,
+         datetime.date(2020, 1, 2), datetime.datetime(2020, 1, 2, 3, 4, 5, 6),
+         decimal.Decimal("12345678901234567.12"), [1, None], ("x", 1)),
+        (2, payloads[1], None, None, None, None, None, None, None, None),
+        (3, payloads[2], -7, "src-b", -1.25, datetime.date(1999, 12, 31),
+         datetime.datetime(1999, 12, 31, 23, 59, 59), decimal.Decimal("-1"),
+         [], (None, None)),
+        (None, payloads[3], 5, "src-null-id", 2.0, None, None, None, [3],
+         ("y", 2)),
+    ]
+    return spark.createDataFrame(
+        rows,
+        f"doc_id bigint, {payload_col} string, big bigint, src string, "
+        "d double, dt date, ts timestamp, dec decimal(20,2), "
+        "arr array<int>, st struct<a:string,b:int>",
+    )
+
+
+def _by_id(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()),
+                  key=lambda r: (r["doc_id"] is None, r["doc_id"]))
+
+
+def test_extract_main_content_carry_matches_join_back(spark):
+    """carry= returns the input's other columns unchanged from the Arrow
+    kernel: the same rows, values and types as joining them back by id
+    (once null ids are filtered, which the inner join-back did), and
+    per row — null id included — when nothing is filtered."""
+    import pytest
+
+    from priority_data_pipeline_azure_sql_db_spark.operators.text import (
+        extract_main_content,
+    )
+
+    para = "<p>A paragraph of plain prose that is long enough to keep.</p>"
+    df = _carry_fixture(spark, "html", [para, "<p>short</p>", None, para])
+    extra = [c for c in df.columns if c not in ("doc_id", "html")]
+    join_back = extract_main_content(df.select("doc_id", "html")).join(
+        df.select("doc_id", *extra), "doc_id")
+    carried = extract_main_content(
+        df.filter(F.col("doc_id").isNotNull()), carry=extra)
+    assert carried.schema == join_back.schema
+    assert _by_id(carried) == _by_id(join_back)
+    assert len(_by_id(carried)) == 3  # the null id is gone
+
+    every_row = _by_id(extract_main_content(df, carry=extra))
+    assert [r["doc_id"] for r in every_row] == [1, 2, 3, None]
+    assert every_row[0]["big"] == 2**60 + 1
+    assert every_row[3]["src"] == "src-null-id"
+    with pytest.raises(ValueError, match="cannot carry"):
+        extract_main_content(df, carry=["content"])
+
+
 def test_ngram_contamination_finds_planted_overlap(spark):
     from priority_data_pipeline_azure_sql_db_spark.operators.dedup import (
         ngram_contamination,
@@ -1442,6 +1503,37 @@ def test_remove_boilerplate_lines_min_docs_threshold(spark):
         for r in remove_boilerplate_lines(df, min_docs=3).collect()
     }
     assert out[1] == "pair line\na" and out[2] == "pair line\nb"
+
+
+def test_remove_boilerplate_lines_carry_matches_join_back(spark):
+    """carry= rides the reassembly aggregate and returns exactly what a
+    join-back by id returned: same rows (null-id docs and docs that are
+    all boilerplate drop either way), values, types and column order,
+    with and without stats and drop_empty."""
+    import pytest
+
+    from priority_data_pipeline_azure_sql_db_spark.operators.dedup import (
+        remove_boilerplate_lines,
+    )
+
+    df = _carry_fixture(spark, "text", [
+        "alpha beta\nshared footer\nunique one",
+        "shared footer",
+        "gamma\n  shared footer \n\nunique three",
+        "shared footer\nnull id line",
+    ])
+    extra = [c for c in df.columns if c not in ("doc_id", "text")]
+    for kw in ({}, {"emit_stats": True}, {"drop_empty": False}):
+        join_back = remove_boilerplate_lines(
+            df.select("doc_id", "text"), **kw
+        ).join(df.select("doc_id", *extra), "doc_id")
+        carried = remove_boilerplate_lines(df, carry=extra, **kw)
+        assert carried.schema == join_back.schema, kw
+        assert _by_id(carried) == _by_id(join_back), kw
+    assert [r["doc_id"] for r in _by_id(
+        remove_boilerplate_lines(df, carry=extra))] == [1, 3]
+    with pytest.raises(ValueError, match="cannot carry"):
+        remove_boilerplate_lines(df, carry=["n_lines_kept"])
 
 
 def test_quantile_threshold_filter_semantics(spark):

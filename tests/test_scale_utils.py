@@ -2830,3 +2830,149 @@ def test_curation_dsir_capstone_narrow_plan(spark, sf_dir):
         )
     finally:
         spark.catalog.clearCache()
+
+
+# html_extract > dsir > linify > boilerplate_lines(stats) >
+# quantile_gate(project) > source_cap: the curation_export benchmark's
+# chain (perfbench/workloads.py), with the driver capstones' cap
+_HTML_DSIR_CHAIN = [
+    {"op": "html_extract"},
+    {"op": "dsir", "target_filter": "lang = 'en'", "n_buckets": 4096},
+    {"op": "linify", "width": 8},
+    {"op": "boilerplate_lines", "min_docs": 2, "stats": True},
+    {"op": "quantile_gate", "drop_num": 1, "drop_den": 5,
+     "project": ["doc_id", "source", "_n_tokens"]},
+    {"op": "source_cap", "cap": 10},
+]
+
+
+def _html_pages(spark, sf_dir):
+    """(doc_id, source, lang, text, html) over a single-file scan —
+    the page template the HTML-graded queries share."""
+    from priority_data_pipeline_azure_sql_db_spark.queries import (
+        _html_template_pages,
+    )
+
+    return _html_template_pages(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text",
+            F.coalesce("text", F.lit("")).alias("t"))
+    )
+
+
+def _jobs_submitted(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _python_kernel_nodes(df):
+    """Python map kernels (MapInPandas/MapInArrow) in the STATIC executed
+    plan, counting each cached relation's plan once — a ReusedExchange
+    prints no subtree, so this is the number of kernel passes a run
+    makes."""
+    seen = set()
+
+    def walk(node):
+        n = int(node.nodeName() in ("MapInPandas", "MapInArrow"))
+        kids = [node.children(), node.subqueries()]
+        if node.nodeName() == "InMemoryTableScan":
+            cached = node.relation().cachedPlan()
+            if cached.toString() not in seen:
+                seen.add(cached.toString())
+                n += walk(cached)
+        for seq in kids:
+            n += sum(walk(seq.apply(i)) for i in range(seq.size()))
+        return n
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_curation_build_submits_no_job(spark, sf_dir):
+    """build_curation only composes the plan: building the benchmark's
+    chain under AQE submits no Spark job. Before, spread_if_narrow's
+    ``df.rdd.getNumPartitions()`` under AQE materialized every shuffle
+    stage below its input — the HTML kernel and the whole DSIR stage
+    ran at build time, and again in the write."""
+    from priority_data_pipeline_azure_sql_db_spark.curation import build_curation
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    pages = _html_pages(spark, sf_dir)
+    pages.schema  # noqa: B018 — resolve the scan before counting
+    try:
+        out, jobs = _jobs_submitted(
+            spark, "curation-build",
+            lambda: build_curation(pages, {"stages": _HTML_DSIR_CHAIN}))
+        assert jobs == [], f"build_curation ran {len(jobs)} job(s)"
+        assert out.columns == ["doc_id", "source", "_n_tokens",
+                               "rank_in_group"]
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_spread_if_narrow_decides_from_the_plan(spark, tmp_path):
+    """spread_if_narrow never runs its input: under AQE an
+    exchange-bearing input is spread without asking (AQE may coalesce
+    it to one partition at run time), a scan as wide as the target is
+    returned unchanged, and a single-file scan is spread — all without
+    a Spark job."""
+    from priority_data_pipeline_azure_sql_db_spark.operators.scale import (
+        spread_if_narrow,
+    )
+
+    spark.range(64).repartition(4).write.parquet(str(tmp_path / "wide"))
+    spark.range(64).coalesce(1).write.parquet(str(tmp_path / "one"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    agg = wide.groupBy((F.col("id") % 7).alias("k")).count()
+    for d in (wide, one, agg):
+        d.schema  # noqa: B018 — resolve the scans before counting
+
+    def spreads(d):
+        return spread_if_narrow(d, "id", num_partitions=4) is not d
+
+    decided, jobs = _jobs_submitted(
+        spark, "spread-if-narrow",
+        lambda: (spreads(agg.withColumnRenamed("k", "id")),
+                 spreads(wide), spreads(one)))
+    assert jobs == [], f"spread_if_narrow ran {len(jobs)} job(s)"
+    assert decided == (True, False, True)
+
+
+def test_curation_html_chains_kernel_passes(spark, sf_dir):
+    """The HTML parse runs once per kernel node that no shared exchange
+    or cache sits above. Static (AQE-off) plans, counted after the
+    change (before it: 3, 2 and 3): the benchmark's chain parses twice
+    (the DSIR scoring pass and the one spread exchange every boilerplate
+    and gate consumer shares — both columns carried, nothing joined
+    back), pipeline_curation_html's chain once, and [html_extract,
+    quantile_gate] twice (the gate caches its narrow proxy, since a
+    kernel-topped chain has no exchange above the parse to reuse, plus
+    the attach to the full rows)."""
+    from priority_data_pipeline_azure_sql_db_spark.curation import build_curation
+
+    chains = {
+        "benchmark": (_HTML_DSIR_CHAIN, 2),
+        "pipeline_curation_html": (
+            [st for st in _HTML_DSIR_CHAIN if st["op"] != "dsir"], 1),
+        "html_extract>quantile_gate": ([
+            {"op": "html_extract"},
+            {"op": "quantile_gate", "drop_num": 1, "drop_den": 5},
+        ], 2),
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, (stages, most) in chains.items():
+            df = build_curation(_html_pages(spark, sf_dir),
+                                {"stages": stages})
+            got = _python_kernel_nodes(df)
+            assert got <= most, f"{name}: {got} kernel passes > {most}"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.catalog.clearCache()
